@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SessionConfs.cpusFromEnv(4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -224,7 +224,7 @@ object Bench {
       // Anchors committed before the line carried "cpus" can't be
       // distinguished — they fail open (no mismatch), same as sf.
       val anchorCpus = anchorText.flatMap(old =>
-        "\"cpus\":([0-9]+)".r.findFirstMatchIn(old).map(_.group(1)))
+        "\"cpus\":([0-9]+)".r.findFirstMatchIn(old).flatMap(_.group(1).toIntOption))
       val cpusMismatch = !sfMismatch && anchorCpus.exists(_ != cpus)
       val noisy = !sfMismatch && !cpusMismatch && (try {
         anchorText.exists(old => noiseTrip(old, canaries, results, total))
@@ -312,7 +312,7 @@ object Bench {
     // full line above and in the BENCH_PARSED_LATEST*.json sidecar
     // (queries_file); this line never replaces either.
     println(compactLine(total, vTotal, substitutedTotal,
-      results.size, variants.size, cpus, errors.toSeq, sfDir,
+      results.size, variants.size, cpus.toString, errors.toSeq, sfDir,
       sidecarWritten))
     spark.stop()
   }

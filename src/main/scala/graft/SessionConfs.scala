@@ -25,4 +25,23 @@ object SessionConfs {
       case None => s.conf.unset(key)
     }
   }
+
+  /** The core count a main runs at: `SPARK_GRAFT_CPUS`, else `default`.
+    * It becomes the `local[N]` master, the shuffle-partition count, a
+    * JSON number and part of result filenames, so a value that is not a
+    * positive integer exits here with a message instead. */
+  def cpusFromEnv(default: Int): Int =
+    parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), default) match {
+      case Right(n) => n
+      case Left(msg) =>
+        System.err.println(msg)
+        sys.exit(2)
+    }
+
+  private[graft] def parseCpus(raw: Option[String],
+      default: Int): Either[String, Int] = raw match {
+    case None => Right(default)
+    case Some(s) => s.trim.toIntOption.filter(_ > 0).toRight(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'")
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * and prints row count + a sample, mirroring the driver's t1 check. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SessionConfs.cpusFromEnv(4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -29,7 +29,12 @@ final case class BucketGradBuf(sums: Array[Long])
   *
   * A document with a NULL bucket array contributes nothing — not even
   * to the bias — exactly like the old `explode(concat(bs, array(-1)))`,
-  * where `concat(NULL, ...)` is NULL and explodes to zero rows. */
+  * where `concat(NULL, ...)` is NULL and explodes to zero rows.
+  *
+  * Every bucket id must lie in [0, nBuckets): one outside it fails with
+  * a message naming the bucket and the range, rather than a raw
+  * ArrayIndexOutOfBoundsException or (at exactly nBuckets) a silent add
+  * into the bias slot. */
 class BucketGradAgg(nBuckets: Int)
     extends Aggregator[BucketGradIn, BucketGradBuf, Seq[Long]] {
 
@@ -40,7 +45,12 @@ class BucketGradAgg(nBuckets: Int)
       // in-place bump: the Aggregator contract gives `reduce` exclusive
       // ownership of `b` (the HistogramAgg safety note)
       val s = b.sums
-      in.bs.foreach { bk => s(bk.toInt) += in.gs }
+      in.bs.foreach { bk =>
+        if (bk < 0 || bk >= nBuckets)
+          throw new IllegalArgumentException(
+            s"BucketGradAgg: bucket $bk is outside [0, $nBuckets)")
+        s(bk.toInt) += in.gs
+      }
       s(nBuckets) += in.gs
     }
     b

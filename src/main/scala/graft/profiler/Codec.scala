@@ -68,7 +68,8 @@ object Codec {
       "vocab" -> JArr(s.vocab.toSeq.sorted.map(JStr))))) ++
     c.datetime.map(s => "datetime" -> JObj(Seq(
       "min_ts" -> JStr(s.minTs), "max_ts" -> JStr(s.maxTs),
-      "n_days" -> JInt(s.nDays)))) ++
+      "n_days" -> JInt(s.nDays)) ++
+      s.daysSketch.map(b => "n_days_sketch" -> b64(b)))) ++
     (if (c.labelVotes.isEmpty) Seq.empty
      else Seq("label_votes" -> strMap(c.labelVotes))) ++
     c.order.map(o => "order" -> JStr(o)) ++
@@ -261,7 +262,9 @@ object Codec {
     }
     val dt = f.get("datetime").map { dj =>
       val d = fields(dj)
-      DatetimeStats(string(d("min_ts")), string(d("max_ts")), long(d("n_days")))
+      DatetimeStats(string(d("min_ts")), string(d("max_ts")), long(d("n_days")),
+        d.get("n_days_sketch").map(s =>
+          java.util.Base64.getDecoder.decode(string(s))))
     }
     ColumnProfile(
       string(f("name")), string(f("spark_type")), string(f("inferred_type")),

@@ -150,12 +150,22 @@ final case class TextStats(
   }
 }
 
-final case class DatetimeStats(minTs: String, maxTs: String, nDays: Long) {
-  def merge(o: DatetimeStats): DatetimeStats =
+final case class DatetimeStats(minTs: String, maxTs: String, nDays: Long,
+    /** Serialized HLL over the distinct days (`unix_date`): when both
+      * merge sides carry one, `nDays` merges as a sketch union, so
+      * chunks with disjoint days add up instead of taking the max. */
+    daysSketch: Option[Array[Byte]] = None) {
+  def merge(o: DatetimeStats): DatetimeStats = {
+    val daysU = (daysSketch, o.daysSketch) match {
+      case (Some(a), Some(b)) => HllOps.union(a, b)
+      case _ => None
+    }
     DatetimeStats(
       if (minTs <= o.minTs) minTs else o.minTs,
       if (maxTs >= o.maxTs) maxTs else o.maxTs,
-      math.max(nDays, o.nDays))
+      daysU.map(_._1).getOrElse(math.max(nDays, o.nDays)),
+      daysU.map(_._2))
+  }
 }
 
 /** Equal-width histogram; merge re-buckets the other histogram into the

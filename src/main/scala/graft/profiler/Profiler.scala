@@ -52,7 +52,7 @@ final case class ProfilerOptions(
       * reference's register_count knob (profiler_options.py:1078-1090).
       * Drives the DataSketches lgK via rsd ≈ 1.04/√(2^lgK); the default
       * 0.008 ≈ 2^14 registers. Also used by the datetime distinct-day
-      * estimates. */
+      * sketches, which are the same DataSketches HLL at [[ndvLgK]]. */
     ndvRsd: Double = 0.008,
     /** Sampling floor per column (the reference's min_true_samples,
       * profile_builder.py:640-647): when > 0, [[Profiler.profileSampled]]
@@ -137,6 +137,8 @@ final case class ProfilerOptions(
   *   pass 1 — ONE `df.agg` where every column contributes sibling aggregate
   *            expressions (count/null/moments/minmax/ndv/quantiles/type
   *            ratios + table-level row stats + correlation co-moments);
+  *            NDVs and datetime day counts are DataSketches HLLs at
+  *            `ndvLgK`;
   *            Catalyst fuses them into a single scan with map-side partial
   *            aggregation, so cost is one read of the data at any scale.
   *   pass 2 — category counts for low-cardinality string columns, one
@@ -333,7 +335,7 @@ object Profiler {
           Seq(
             date_format(min(c), "yyyy-MM-dd HH:mm:ss").as(s"${nm}__mints"),
             date_format(max(c), "yyyy-MM-dd HH:mm:ss").as(s"${nm}__maxts"),
-            approx_count_distinct(to_date(c), opts.ndvRsd).as(s"${nm}__ndays"))
+            daysSketch(to_date(c), opts).as(s"${nm}__ndays"))
         case _ => Seq.empty
       }
       val plugged = statPlugins.filter(_.appliesTo(f.dataType))
@@ -870,6 +872,7 @@ object Profiler {
     val exemplars =
       if (opts.computeExemplars) exemplarsOf(df, fields)
       else Map.empty[String, Seq[String]]
+    val t8 = System.currentTimeMillis()
 
     // ---- assemble -----------------------------------------------------
     assembleProfile(fields, opts, statPlugins, vals, corrPairs,
@@ -878,7 +881,7 @@ object Profiler {
       Map("aggregate" -> (t1 - t0), "categories" -> (t2 - t1),
         "histograms" -> (t3 - t2), "labeler" -> (t4 - t3),
         "vocab" -> (t5 - t4), "order" -> (t6 - t5),
-        "datetime_formats" -> (t7 - t6)))
+        "datetime_formats" -> (t7 - t6), "exemplars" -> (t8 - t7)))
   }
 
   /** Mergeable correlation state: pairwise-complete count, means, second
@@ -966,14 +969,14 @@ object Profiler {
       // all-null / empty timestamp columns have no min — no stats block;
       // string columns with discovered formats carry their parsed extremes
       val dt = if (tsCols.contains(nm) && g[String](s"${nm}__mints") != null) {
-        Some(DatetimeStats(g[String](s"${nm}__mints"), g[String](s"${nm}__maxts"),
-          g[Long](s"${nm}__ndays")))
+        Some(daysStats(g[String](s"${nm}__mints"), g[String](s"${nm}__maxts"),
+          g[Array[Byte]](s"${nm}__ndays")))
       } else strDtStats.get(nm)
       // Over-cap string columns keep a capped=true marker (the reference's
       // stop-condition flags cap_reached rather than dropping the stat,
       // categorical_column_profile.py:478-521) so Diff can distinguish
       // "capped" from "not categorical". NOTE: the cap decision keys off
-      // approx_count_distinct, so nCat for a capped column is the APPROX
+      // the HLL NDV estimate, so nCat for a capped column is the APPROX
       // cardinality (one-pass tradeoff vs the reference's exact stop
       // condition) — Diff consumers must not treat a capped nCat as exact.
       // Capped columns keep CMS heavy hitters: candidate keys come from
@@ -1053,6 +1056,18 @@ object Profiler {
       cols, corrMap, timings, rowsSk)
   }
 
+  /** Distinct-day sketch of a date column: a DataSketches HLL at
+    * [[ProfilerOptions.ndvLgK]] over `unix_date`, which is null for a
+    * null date, and `hll_sketch_agg` skips nulls. One sketch shape for
+    * timestamp, date and parsed-string columns, so their day sketches
+    * union with each other on merge. */
+  private def daysSketch(date: Column, opts: ProfilerOptions): Column =
+    hll_sketch_agg(unix_date(date), lit(opts.ndvLgK))
+
+  private def daysStats(minTs: String, maxTs: String,
+      sketch: Array[Byte]): DatetimeStats =
+    DatetimeStats(minTs, maxTs, HllOps.estimate(sketch), Some(sketch))
+
   /** Pass 7 (shared): datetime format discovery + parsed extremes for
     * the given string columns. The reference pre-tests 50 rows before
     * the per-format loop (datetime_column_profile.py:392-410); here the
@@ -1091,14 +1106,13 @@ object Profiler {
               .as(s"${c}__smints"),
             date_format(max(parsed), "yyyy-MM-dd HH:mm:ss")
               .as(s"${c}__smaxts"),
-            approx_count_distinct(to_date(parsed), opts.ndvRsd)
-              .as(s"${c}__sndays"))
+            daysSketch(to_date(parsed), opts).as(s"${c}__sndays"))
         }
         val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
         parseCols.keySet.flatMap { c =>
           Option(r.getAs[String](s"${c}__smints")).map(mn =>
-            c -> DatetimeStats(mn, r.getAs[String](s"${c}__smaxts"),
-              r.getAs[Long](s"${c}__sndays")))
+            c -> daysStats(mn, r.getAs[String](s"${c}__smaxts"),
+              r.getAs[Array[Byte]](s"${c}__sndays")))
         }.toMap
       }
     }

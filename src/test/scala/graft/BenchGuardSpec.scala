@@ -98,4 +98,12 @@ class BenchGuardSpec extends AnyFunSuite {
     val cotenant = jitter + ("text_memsize" -> 0.21)
     assert(Bench.noiseTrip(goldenAnchor, canaries, cotenant, total = 95.0))
   }
+
+  test("SPARK_GRAFT_CPUS parses as a positive Int or names the bad value") {
+    assert(SessionConfs.parseCpus(None, 4) == Right(4))
+    assert(SessionConfs.parseCpus(Some("8"), 4) == Right(8))
+    for (bad <- Seq("*", "", "0", "-2", "4.5", "8 cores"))
+      assert(SessionConfs.parseCpus(Some(bad), 4) ==
+        Left(s"SPARK_GRAFT_CPUS must be a positive integer, got '$bad'"), bad)
+  }
 }

@@ -57,4 +57,21 @@ class BucketGradAggSpec extends AnyFunSuite {
     val sums = df.agg(gradAgg(col("bs"), col("gs"))).head().getSeq[Long](0)
     assert(sums == Seq(0L, 0L, 0L))
   }
+
+  test("a bucket outside [0, nBuckets) fails naming the bucket and range") {
+    import spark.implicits._
+    val gradAgg = udaf(new graft.functions.BucketGradAgg(4))
+    // 4 would land in the bias slot, -1 past the array start
+    for (bad <- Seq(4L, -1L)) {
+      val df = Seq((Seq(0L, bad), 1L)).toDF("bs", "gs")
+      val e = intercept[Exception](
+        df.agg(gradAgg(col("bs"), col("gs"))).head())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(chain.exists(x => x.isInstanceOf[IllegalArgumentException] &&
+        x.getMessage.contains(s"bucket $bad is outside [0, 4)")),
+        chain.map(_.toString).mkString(" <- "))
+      assert(!chain.exists(_.isInstanceOf[ArrayIndexOutOfBoundsException]))
+    }
+  }
 }

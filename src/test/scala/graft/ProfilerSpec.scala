@@ -22,6 +22,27 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Block until every event posted so far has reached the listeners,
+    * so a spec can assert on what its listener saw. `listenerBus` is
+    * private[spark] (public in bytecode), so this uses reflection; if no
+    * `waitUntilEmpty` overload resolves (a Spark upgrade renamed it), it
+    * fails loudly rather than leave listener assertions flaky. */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    val noArg = bus.getClass.getMethods.find(m =>
+      m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+    val oneArg = bus.getClass.getMethods.find(m =>
+      m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
+    (noArg, oneArg) match {
+      case (Some(m), _) => m.invoke(bus)
+      case (None, Some(m)) => m.invoke(bus, java.lang.Long.valueOf(10000L))
+      case (None, None) => throw new IllegalStateException(
+        "no waitUntilEmpty overload on LiveListenerBus: listener " +
+          "assertions would be flaky without a drain")
+    }
+  }
 }
 
 class ProfilerSpec extends AnyFunSuite {
