@@ -4,29 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = SessionConfs.cpusFromEnv(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single large parquet files split at the default 128 MB starve a
-      // 32-thread executor (measured: labeler_votes scan-stage on 6
-      // tasks, dsir_weights on 2) — size splits to the core count
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      // ObjectHashAggregate falls back to SORT-BASED aggregation at 128
-      // distinct keys per partition (Spark's conservative default) —
-      // measured sorting the triangle pipeline's full half-edge stream.
-      // Every object-buffer aggregate in this suite keys on bounded or
-      // model-sized groups, so the hash path is safe at any suite scale.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "20000000")
-      .config("spark.ui.enabled", "false")
-      // AQE stays ON (the 100 TB default); SPARK_GRAFT_AQE=false exists
-      // to measure how much of the toy-scale total is AQE's
-      // one-job-per-exchange orchestration rather than plan work
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     // stale-summary guard: a prior run (possibly at another SF) may have
     // left <q>.summary.json files in the persistent stage dir, which
     // would silently attach a previous run's batch counts to this bench
@@ -44,6 +22,17 @@ object Bench {
         } finally stale.close()
       }
     }
+    val onlyWarm = sys.env.get("SPARK_GRAFT_QUERIES")
+      .map(_.split(",").map(_.trim).toSet)
+    warm(spark, sfDir, onlyWarm)
+    run(spark, sfDir, cpus, onlyWarm)
+    spark.stop()
+  }
+
+  /** Untimed warm-up before timing `onlyWarm` (default: every query and
+    * twin) at `sfDir`; [[graft.tools.Trace]] warms the same way. */
+  private[graft] def warm(spark: SparkSession, sfDir: String,
+      onlyWarm: Option[Set[String]]): Unit = {
     // untimed warmup: JIT + codegen + parquet footer caches, so the first
     // timed query doesn't absorb one-time JVM startup cost
     try {
@@ -61,8 +50,6 @@ object Bench {
     // setup the oracle side reads for free.
     val warmDir = "/root/testdata/sf0.001"
     val readerQs = Set("sniff_profile", "avro_scan", "json_scan", "csv_utf16")
-    val onlyWarm = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
     if (new java.io.File(warmDir).isDirectory)
       (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
         .filter(kv => onlyWarm.forall(_(kv._1)))
@@ -73,6 +60,10 @@ object Bench {
     // the warmup pass itself leaves sf0.001 caches behind — drop them so
     // the first timed query starts from the same clean state as the rest
     spark.catalog.clearCache()
+  }
+
+  private def run(spark: SparkSession, sfDir: String, cpus: Int,
+      onlyWarm: Option[Set[String]]): Unit = {
     // benchOnly = scale-path/approx twins (xxhash64 MinHash/SimHash, GK
     // quantiles, HLL NDV) timed alongside the oracle-checked exact modes;
     // the headline "value" stays the verified-suite total so it remains
@@ -158,7 +149,7 @@ object Bench {
           case _ => acc
         }
     }
-    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errs = errors.map(Json.str).mkString("[", ",", "]")
     // per-stream replay metrics (batches / state rows / max batch ms),
     // written by StreamMetrics.dump during the run, attached next to
     // the timing entries so a slow stream_* number is attributable to
@@ -173,7 +164,7 @@ object Bench {
       }.mkString("{", ",", "}")
     }
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${js(results)},"variants":${js(variants)},"variants_total":${r3(vTotal)},"substituted_total":${r3(substitutedTotal)},"stream":$streamMetrics,"errors":$errs,"cpus":$cpus,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${js(results)},"variants":${js(variants)},"variants_total":${r3(vTotal)},"substituted_total":${r3(substitutedTotal)},"stream":$streamMetrics,"errors":$errs,"cpus":$cpus,"sf":${Json.str(sfDir)}}"""
     println(line)
     // sbt prefixes stdout with "[info] ", which has broken downstream
     // JSON extraction before — persist the bare line as a file too.
@@ -293,13 +284,10 @@ object Bench {
         if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
       } catch { case e: Throwable =>
         System.err.println(s"[bench] git rev-parse failed: $e"); "unknown" }
-      def jq(s: String): String = s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
       val sidecar = dest.replace("BENCH_LATEST", "BENCH_PARSED_LATEST")
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sidecar),
-        s"""{"git_head":"${jq(head)}","dest":"${jq(dest)}",""" +
+        s"""{"git_head":${Json.str(head)},"dest":${Json.str(dest)},""" +
           s""""parsed":$line}""" + "\n")
       catch { case e: Throwable =>
         System.err.println(s"[bench] FAILED to write $sidecar: $e") }
@@ -314,7 +302,6 @@ object Bench {
     println(compactLine(total, vTotal, substitutedTotal,
       results.size, variants.size, cpus.toString, errors.toSeq, sfDir,
       sidecarWritten))
-    spark.stop()
   }
 
   /** The compact totals-only tail line. Pure so BenchGuardSpec can pin
@@ -328,13 +315,14 @@ object Bench {
       sidecar: Option[String]): String = {
     def r3(v: Double) = if (v < 0) "-1" else f"$v%.3f"
     val errNames = errors.take(CompactMaxErrors)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+      .map(Json.str).mkString("[", ",", "]")
     s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""n_queries":$nQueries,"n_variants":$nVariants,""" +
       s""""variants_total":${r3(vTotal)},""" +
       s""""substituted_total":${r3(substitutedTotal)},""" +
       s""""cpus":$cpus,"n_errors":${errors.size},"errors":$errNames,""" +
-      s""""queries_file":"${sidecar.getOrElse("")}","sf":"$sfDir"}"""
+      s""""queries_file":${Json.str(sidecar.getOrElse(""))},""" +
+      s""""sf":${Json.str(sfDir)}}"""
   }
 
   /** Noise-window decision against the committed anchor JSON, pure so

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.profiler.Profiler
 
 /** Times the flagship full profile (all passes) of lineitem at a given
@@ -19,29 +18,9 @@ object ProfileBench {
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = SessionConfs.cpusFromEnv(32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(SessionConfs.cpusFromEnv(32))
     val li = Tables.load(spark, sfDir, "lineitem")
     li.count() // warm
-    // SPARK_GRAFT_PROFILE_AB=1: time a WARM run of each option A/B
-    // (default vs cmsHeavyHitters off) to isolate sketch/candidate cost
-    // from cold-JVM JIT noise
-    if (sys.env.get("SPARK_GRAFT_PROFILE_AB").contains("1")) {
-      import graft.profiler.ProfilerOptions
-      def time(o: ProfilerOptions): Double = {
-        val t = System.nanoTime(); Profiler.profile(li, o)
-        (System.nanoTime() - t) / 1e9
-      }
-      time(ProfilerOptions()) // warm
-      println(s"""{"metric":"profile_ab","default":${time(ProfilerOptions())},""" +
-        s""""no_cms_mg":${time(ProfilerOptions(cmsHeavyHitters = false))},""" +
-        s""""no_vocab":${time(ProfilerOptions(computeVocab = false))}}""")
-    }
     val t0 = System.nanoTime()
     val p = Profiler.profile(li)
     val full = (System.nanoTime() - t0) / 1e9

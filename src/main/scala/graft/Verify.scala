@@ -1,31 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = SessionConfs.cpusFromEnv(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single large parquet files split at the default 128 MB starve a
-      // 32-thread executor (measured: labeler_votes scan-stage on 6
-      // tasks, dsir_weights on 2) — size splits to the core count
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      // ObjectHashAggregate falls back to SORT-BASED aggregation at 128
-      // distinct keys per partition (Spark's conservative default) —
-      // measured sorting the triangle pipeline's full half-edge stream.
-      // Every object-buffer aggregate in this suite keys on bounded or
-      // model-sized groups, so the hash path is safe at any suite scale.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "20000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(SessionConfs.cpusFromEnv(4))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_QUERIES=a,b,c → dump only that subset (iteration aid;
     // tools/check.py compares whatever dump dirs exist)
@@ -39,26 +19,15 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(m: Map[String, String]) = m
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql))
     // SQL-expressible benchOnly twins: timed (never hash-compared) by
     // tools/bench_oracle.py so headline substitutions stay paired
-    val vjson = SparkEntry.benchOnlySql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/variant_sql.json"), vjson)
+    Files.writeString(Paths.get(s"$outDir/variant_sql.json"),
+      obj(SparkEntry.benchOnlySql))
     spark.stop()
   }
 }

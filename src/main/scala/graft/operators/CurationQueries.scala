@@ -157,10 +157,7 @@ object CurationQueries extends QueryModule {
     // materialization costs one extra job + scheduling barrier per GD
     // round (trace: 2 jobs/round → 1). Session value saved/restored;
     // results are plan-independent (exact long sums) and hash-verified.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = s.conf.get(aqeKey)
-    s.conf.set(aqeKey, "false")
-    try {
+    graft.SessionConfs.withConf(s, "spark.sql.adaptive.enabled", "false") {
       for (t <- 1 to ClfIters) {
         val sums = score(w, bias)
           .select(col("bs"), round(col("g") * 1e6).cast("long").as("gs"))
@@ -177,7 +174,7 @@ object CurationQueries extends QueryModule {
           }.toMap
         bias = round8(bias - lr * (sums(ClfBuckets).toDouble / 1e6) / nDocs)
       }
-    } finally s.conf.set(aqeKey, aqePrev)
+    }
 
     score(w, bias)
       .groupBy("y")

@@ -356,7 +356,7 @@ object StatsQueries extends QueryModule {
     // kinds (ia = -1 ⇒ total row; ib = -1 ⇒ single item ia). The old
     // three-consumer form (pairs / itemCounts / nOrders off the same
     // `masks`) re-materialized the corpus aggregation — ReuseExchange
-    // only deduped two of the subplans, StageProbe measured two full
+    // only deduped two of the subplans, Trace measured two full
     // 26-task corpus scans — and a `.cache()` of `masks` measured WORSE
     // (3.0 → 4.9 s: the frame is ≈ one row per distinct basket, and
     // three consumers re-paid columnar deserialization on all of it).

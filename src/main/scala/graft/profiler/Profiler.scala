@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
+import graft.SessionConfs.withConf
 
 /** Options mirroring the reference's ProfilerOptions surface
   * (profiler_options.py): category cap = the stop-condition, histogram bin
@@ -149,30 +150,6 @@ final case class ProfilerOptions(
   * fixed-width, quantiles use percentile_approx (GK sketch).
   */
 object Profiler {
-
-  /** Run the profiler's action set with AQE disabled, restoring the
-    * session value after (r20). Every exchange a profile pass plans is
-    * bounded-cardinality BY CONSTRUCTION: pass 1 is a partial-agg'd
-    * global (or ≤ maxGroups-key) aggregation whose exchange carries one
-    * sketch row per map task (per key), the category/vocab melts
-    * aggregate map-side to ≤ qualifying-columns × maxCategories rows,
-    * and the order pass is map-only. Adaptive re-planning has nothing
-    * to coalesce or skew-split on such exchanges at ANY scale, while
-    * costing one extra job + scheduling barrier per exchange
-    * materialization — at bench scale that was roughly half the
-    * profiler composites' job counts (stream_gate trace r20). AQE stays
-    * ON session-wide for genuinely adaptive plans (joins, wide
-    * shuffles); this scopes the opt-out to the profiler's own jobs.
-    * NOTE: session-global for the duration (the connectedComponents
-    * caveat) — callers running OTHER queries concurrently on the same
-    * SparkSession should profile on spark.newSession(). */
-  private def withAqeOff[T](spark: org.apache.spark.sql.SparkSession)(
-      f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try f finally spark.conf.set(key, prev)
-  }
 
   /** Incremental profiling (the reference's `update_profile(chunk)`,
     * profile_builder.py:939-998): profile the chunk, merge into the
@@ -404,7 +381,9 @@ object Profiler {
     * from the result had zero rows. `splitCol` itself is not profiled. */
   def profileSplit(df0: DataFrame, splitCol: String,
       opts: ProfilerOptions = ProfilerOptions()): Map[Long, Profile] =
-    withAqeOff(df0.sparkSession) { profileSplitImpl(df0, splitCol, opts) }
+    withConf(df0.sparkSession, AqeKey, "false") {
+      profileSplitImpl(df0, splitCol, opts)
+    }
 
   private def profileSplitImpl(df0: DataFrame, splitCol: String,
       opts: ProfilerOptions): Map[Long, Profile] = {
@@ -693,8 +672,26 @@ object Profiler {
       }
     }.toMap
 
+  private val AqeKey = "spark.sql.adaptive.enabled"
+
+  /** The profiler's action set runs with AQE disabled (r20), here and in
+    * [[profileSplit]]. Every exchange a profile pass plans is
+    * bounded-cardinality BY CONSTRUCTION: pass 1 is a partial-agg'd
+    * global (or ≤ maxGroups-key) aggregation whose exchange carries one
+    * sketch row per map task (per key), the category/vocab melts
+    * aggregate map-side to ≤ qualifying-columns × maxCategories rows,
+    * and the order pass is map-only. Adaptive re-planning has nothing
+    * to coalesce or skew-split on such exchanges at ANY scale, while
+    * costing one extra job + scheduling barrier per exchange
+    * materialization — at bench scale that was roughly half the
+    * profiler composites' job counts (stream_gate trace r20). AQE stays
+    * ON session-wide for genuinely adaptive plans (joins, wide
+    * shuffles); this scopes the opt-out to the profiler's own jobs.
+    * NOTE: session-global for the duration (the connectedComponents
+    * caveat) — callers running OTHER queries concurrently on the same
+    * SparkSession should profile on spark.newSession(). */
   private def profileImpl(df0: DataFrame, opts: ProfilerOptions): Profile =
-    withAqeOff(df0.sparkSession) { profileWholeImpl(df0, opts) }
+    withConf(df0.sparkSession, AqeKey, "false") { profileWholeImpl(df0, opts) }
 
   private def profileWholeImpl(df0: DataFrame, opts: ProfilerOptions): Profile = {
     val t0 = System.currentTimeMillis()

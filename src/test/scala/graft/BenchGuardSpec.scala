@@ -49,26 +49,36 @@ class BenchGuardSpec extends AnyFunSuite {
 
   test("compact tail line stays under 1 KB and parses standalone") {
     // worst realistic case: full registry, every query failing (the
-    // error list must cap at CompactMaxErrors names + a count)
+    // error list must cap at CompactMaxErrors names + a count); the
+    // second input puts a quote, a backslash and a newline into an error
+    // name and the data dir, which must come out escaped
     val manyErrors = (1 to 200).map(i => s"some_long_query_name_$i")
-    val line = Bench.compactLine(
-      total = 12345.678, vTotal = 234.567, substitutedTotal = 12000.123,
-      nQueries = 146, nVariants = 14, cpus = "32", errors = manyErrors,
-      sfDir = "/root/testdata/sf0.1",
-      sidecar = Some("BENCH_PARSED_LATEST_noisy.json"))
-    assert(line.length < 1024,
-      s"compact line must fit any tail capture window: ${line.length}")
-    // shape: one complete JSON object carrying the headline fields
-    assert(line.startsWith("{") && line.endsWith("}"))
-    for (k <- Seq("\"metric\":\"total\"", "\"value\":12345.678",
-        "\"unit\":\"sec\"", "\"substituted_total\":12000.123",
-        "\"n_queries\":146", "\"cpus\":32", "\"n_errors\":200",
-        "\"sf\":\"/root/testdata/sf0.1\"",
-        "\"queries_file\":\"BENCH_PARSED_LATEST_noisy.json\""))
-      assert(line.contains(k), s"missing $k in $line")
-    assert(!line.contains("some_long_query_name_9"),
-      "error names past the cap must not appear")
-    assert(line.contains("some_long_query_name_8"))
+    for ((errors, sfDir) <- Seq(
+        (manyErrors, "testdata/sf0.1"),
+        (("bad\"q\\uery\n" +: manyErrors).take(200), "/data/s\"f\\0.1\n"))) {
+      val line = Bench.compactLine(
+        total = 12345.678, vTotal = 234.567, substitutedTotal = 12000.123,
+        nQueries = 146, nVariants = 14, cpus = "32", errors = errors,
+        sfDir = sfDir,
+        sidecar = Some("BENCH_PARSED_LATEST_noisy.json"))
+      assert(line.length < 1024,
+        s"compact line must fit any tail capture window: ${line.length}")
+      // shape: one complete JSON object carrying the headline fields
+      assert(line.startsWith("{") && line.endsWith("}"))
+      val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(line)
+      assert(parsed.get("sf").asText == sfDir)
+      val names = parsed.get("errors")
+      assert((0 until names.size).map(names.get(_).asText) ==
+        errors.take(Bench.CompactMaxErrors))
+      for (k <- Seq("\"metric\":\"total\"", "\"value\":12345.678",
+          "\"unit\":\"sec\"", "\"substituted_total\":12000.123",
+          "\"n_queries\":146", "\"cpus\":32", "\"n_errors\":200",
+          "\"queries_file\":\"BENCH_PARSED_LATEST_noisy.json\""))
+        assert(line.contains(k), s"missing $k in $line")
+      assert(!line.contains("some_long_query_name_9"),
+        "error names past the cap must not appear")
+    }
   }
 
   test("compact line: clean run has empty errors and -1 for failed totals") {

@@ -83,7 +83,7 @@ class DistinctDaysSpec extends AnyFunSuite {
             e: Exception): Unit = ()
       }
       spark.listenerManager.register(l)
-      try { f; SparkTestSession.drainListenerBus() }
+      try { f; Session.drainListenerBus(spark.sparkContext) }
       finally spark.listenerManager.unregister(l)
       seen.toArray.toSeq.map(_.asInstanceOf[Boolean])
     }

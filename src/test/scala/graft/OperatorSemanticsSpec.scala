@@ -276,6 +276,26 @@ class OperatorSemanticsSpec extends AnyFunSuite {
       .collect()
     assert(spark.conf.get(shuffleKey) == shuffleBefore,
       s"stream query leaked $shuffleKey")
+    // scopes over keys the caller has set explicitly: each key is set to
+    // its non-default value first (a restore that unsets, or resets to
+    // the default, shows) and then to its default (a leak of the
+    // scope's own value shows)
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val cpKey = "spark.sql.constraintPropagation.enabled"
+    val scoped = Seq[(String, String, () => Unit)](
+      ("Profiler.profile", aqeKey, () => profiler.Profiler.profile(li)),
+      ("quality_classifier", aqeKey, () =>
+        SparkEntry.queries("quality_classifier")(spark, SparkTestSession.sfDir)
+          .collect()),
+      ("connectedComponents", cpKey, () =>
+        graph.GraphProfiler.connectedComponents(
+          Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("src", "dst"),
+          smallGraphCap = 0).collect()))
+    for ((name, key, run) <- scoped; value <- Seq("false", "true"))
+      SessionConfs.withConf(spark, key, value) {
+        run()
+        assert(spark.conf.get(key) == value, s"$name leaked $key")
+      }
   }
 
   test("embed_drift cosines match the hand-computed axis fixture") {

@@ -237,12 +237,10 @@ class PlanInvariantsSpec extends AnyFunSuite {
     // the fact side); auto-broadcast is disabled around the plan build
     // so the gate exercises the sort-merge path a 100 TB fact⋈fact join
     // actually takes.
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    val p = try {
-      spark.conf.set(key, "-1")
+    val p = SessionConfs.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold", "-1") {
       plan("bucket_join")
-    } finally spark.conf.set(key, prev)
+    }
     val smjs = collectAll(p) { case j: SortMergeJoinExec => j }
     assert(smjs.nonEmpty, "bucketed join did not plan as a sort-merge join:\n" +
       p.toString.linesIterator.take(40).mkString("\n"))

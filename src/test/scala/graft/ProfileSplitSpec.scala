@@ -355,7 +355,7 @@ class ProfileSplitSpec extends AnyFunSuite {
           n.incrementAndGet()
       }
       sc.addSparkListener(l)
-      try { f; SparkTestSession.drainListenerBus() }
+      try { f; Session.drainListenerBus(sc) }
       finally sc.removeSparkListener(l)
       n.get()
     }

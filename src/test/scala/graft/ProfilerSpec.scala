@@ -11,38 +11,7 @@ object SparkTestSession {
   val sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Block until every event posted so far has reached the listeners,
-    * so a spec can assert on what its listener saw. `listenerBus` is
-    * private[spark] (public in bytecode), so this uses reflection; if no
-    * `waitUntilEmpty` overload resolves (a Spark upgrade renamed it), it
-    * fails loudly rather than leave listener assertions flaky. */
-  def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val noArg = bus.getClass.getMethods.find(m =>
-      m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-    val oneArg = bus.getClass.getMethods.find(m =>
-      m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-    (noArg, oneArg) match {
-      case (Some(m), _) => m.invoke(bus)
-      case (None, Some(m)) => m.invoke(bus, java.lang.Long.valueOf(10000L))
-      case (None, None) => throw new IllegalStateException(
-        "no waitUntilEmpty overload on LiveListenerBus: listener " +
-          "assertions would be flaky without a drain")
-    }
-  }
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 class ProfilerSpec extends AnyFunSuite {

@@ -44,30 +44,27 @@ class ScaleToolsSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join with zero exchanges") {
-    val conf = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val facts = (1 to 5000).map(i => (i.toLong % 500, i.toLong))
-        .toDF("k", "v")
-      val dims = (1 to 5000).map(i => (i.toLong % 500, s"t$i"))
-        .toDF("k", "t")
-      Bucketing.writeBucketed(facts, "b_facts", "target/bucketed/facts", "k", 8)
-      Bucketing.writeBucketed(dims, "b_dims", "target/bucketed/dims", "k", 8)
-      val joined = spark.table("b_facts").join(spark.table("b_dims"), "k")
-        .groupBy("k").agg(count(lit(1)).as("n"))
-      assert(Bucketing.isExchangeFree(joined),
-        joined.queryExecution.executedPlan.toString.take(2000))
-      // and the numbers are right
-      assert(joined.agg(sum("n")).collect()(0).getLong(0) ==
-        facts.join(dims, "k").count())
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
-      Bucketing.drop(spark, "b_facts")
-      Bucketing.drop(spark, "b_dims")
+    SessionConfs.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
+      SessionConfs.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+        try {
+          val facts = (1 to 5000).map(i => (i.toLong % 500, i.toLong))
+            .toDF("k", "v")
+          val dims = (1 to 5000).map(i => (i.toLong % 500, s"t$i"))
+            .toDF("k", "t")
+          Bucketing.writeBucketed(facts, "b_facts", "target/bucketed/facts", "k", 8)
+          Bucketing.writeBucketed(dims, "b_dims", "target/bucketed/dims", "k", 8)
+          val joined = spark.table("b_facts").join(spark.table("b_dims"), "k")
+            .groupBy("k").agg(count(lit(1)).as("n"))
+          assert(Bucketing.isExchangeFree(joined),
+            joined.queryExecution.executedPlan.toString.take(2000))
+          // and the numbers are right
+          assert(joined.agg(sum("n")).collect()(0).getLong(0) ==
+            facts.join(dims, "k").count())
+        } finally {
+          Bucketing.drop(spark, "b_facts")
+          Bucketing.drop(spark, "b_dims")
+        }
+      }
     }
   }
 }
