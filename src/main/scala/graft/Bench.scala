@@ -30,9 +30,10 @@ object Bench {
   }
 
   /** Untimed warm-up before timing `onlyWarm` (default: every query and
-    * twin) at `sfDir`; [[graft.tools.Trace]] warms the same way. */
+    * twin) at `sfDir`; [[graft.tools.Trace]] warms the same way. Returns
+    * whether the full codegen warm pass at the smallest SF ran. */
   private[graft] def warm(spark: SparkSession, sfDir: String,
-      onlyWarm: Option[Set[String]]): Unit = {
+      onlyWarm: Option[Set[String]]): Boolean = {
     // untimed warmup: JIT + codegen + parquet footer caches, so the first
     // timed query doesn't absorb one-time JVM startup cost
     try {
@@ -50,7 +51,8 @@ object Bench {
     // setup the oracle side reads for free.
     val warmDir = "/root/testdata/sf0.001"
     val readerQs = Set("sniff_profile", "avro_scan", "json_scan", "csv_utf16")
-    if (new java.io.File(warmDir).isDirectory)
+    val warmed = new java.io.File(warmDir).isDirectory
+    if (warmed)
       (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
         .filter(kv => onlyWarm.forall(_(kv._1)))
         .foreach { case (name, fn) =>
@@ -60,6 +62,7 @@ object Bench {
     // the warmup pass itself leaves sf0.001 caches behind — drop them so
     // the first timed query starts from the same clean state as the rest
     spark.catalog.clearCache()
+    warmed
   }
 
   private def run(spark: SparkSession, sfDir: String, cpus: Int,

@@ -107,7 +107,11 @@ object Trace {
       "usage: SPARK_GRAFT_SF_DIR=<data dir> graft.tools.Trace <query...>")
     val cpus = SessionConfs.cpusFromEnv(4)
     val spark = Session.local(cpus)
-    Bench.warm(spark, dir, Some(args.toSet))
+    // without the codegen warm pass the first query's wall_s and
+    // residual_s would time compilation, not work — fail loudly
+    require(Bench.warm(spark, dir, Some(args.toSet)),
+      "warm-up data missing: an unwarmed run would time codegen " +
+        "compilation, not work")
     val sc = spark.sparkContext
     (1 to 5).foreach(_ => sc.parallelize(1 to 1, 1).count())
     val floor = (medianS(21)(sc.parallelize(1 to 1, 1).count()),

@@ -54,8 +54,9 @@ class BenchGuardSpec extends AnyFunSuite {
     // name and the data dir, which must come out escaped
     val manyErrors = (1 to 200).map(i => s"some_long_query_name_$i")
     for ((errors, sfDir) <- Seq(
-        (manyErrors, "testdata/sf0.1"),
-        (("bad\"q\\uery\n" +: manyErrors).take(200), "/data/s\"f\\0.1\n"))) {
+        (manyErrors, "/data/testdata/sf0.1"),
+        (("some_long_\"query\\name\n_0" +: manyErrors).take(200),
+          "/data/testdata/s\"f\\0.1\n"))) {
       val line = Bench.compactLine(
         total = 12345.678, vTotal = 234.567, substitutedTotal = 12000.123,
         nQueries = 146, nVariants = 14, cpus = "32", errors = errors,

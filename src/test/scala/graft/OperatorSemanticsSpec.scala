@@ -262,36 +262,35 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     val thresholdKey =
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val shuffleKey = "spark.sql.shuffle.partitions"
-    val thresholdBefore = spark.conf.getOption(thresholdKey)
-    val shuffleBefore = spark.conf.get(shuffleKey)
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val cpKey = "spark.sql.constraintPropagation.enabled"
     val li = Seq((100L, 1L), (100L, 2L), (100L, 3L), (100L, 4L))
       .toDF("l_orderkey", "l_partkey")
     val dir = fixtureDir("conf_leak")
     li.write.parquet(s"$dir/lineitem.parquet")
-    val r = SparkEntry.queries("graph_triangles")(spark, dir).collect()(0)
-    assert(r.getAs[Long]("n_triangles") == 4)
-    assert(spark.conf.getOption(thresholdKey) == thresholdBefore,
-      s"graph_triangles leaked $thresholdKey")
-    SparkEntry.queries("stream_windows")(spark, SparkTestSession.sfDir)
-      .collect()
-    assert(spark.conf.get(shuffleKey) == shuffleBefore,
-      s"stream query leaked $shuffleKey")
-    // scopes over keys the caller has set explicitly: each key is set to
-    // its non-default value first (a restore that unsets, or resets to
-    // the default, shows) and then to its default (a leak of the
-    // scope's own value shows)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val scoped = Seq[(String, String, () => Unit)](
-      ("Profiler.profile", aqeKey, () => profiler.Profiler.profile(li)),
-      ("quality_classifier", aqeKey, () =>
+    // each key is set explicitly to a value that differs from the scope's
+    // own: first a non-default one (a restore that unsets, or resets to
+    // the default, shows), then its default (a leak of the scope's value
+    // shows). The session's own settings can match a scope's value, so
+    // comparing against them alone would not catch a leak.
+    val scoped = Seq[(String, String, Seq[String], () => Unit)](
+      ("graph_triangles", thresholdKey, Seq("64", "128"), () => {
+        val r = SparkEntry.queries("graph_triangles")(spark, dir).collect()(0)
+        assert(r.getAs[Long]("n_triangles") == 4)
+      }),
+      ("stream_windows", shuffleKey, Seq("3", "200"), () =>
+        SparkEntry.queries("stream_windows")(spark, SparkTestSession.sfDir)
+          .collect()),
+      ("Profiler.profile", aqeKey, Seq("false", "true"), () =>
+        profiler.Profiler.profile(li)),
+      ("quality_classifier", aqeKey, Seq("false", "true"), () =>
         SparkEntry.queries("quality_classifier")(spark, SparkTestSession.sfDir)
           .collect()),
-      ("connectedComponents", cpKey, () =>
+      ("connectedComponents", cpKey, Seq("false", "true"), () =>
         graph.GraphProfiler.connectedComponents(
           Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("src", "dst"),
           smallGraphCap = 0).collect()))
-    for ((name, key, run) <- scoped; value <- Seq("false", "true"))
+    for ((name, key, values, run) <- scoped; value <- values)
       SessionConfs.withConf(spark, key, value) {
         run()
         assert(spark.conf.get(key) == value, s"$name leaked $key")
